@@ -15,124 +15,36 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q1_agg")(spark, "/root/testdata/sf0.001")
 
+  /** Every operator module, in merge order. Query names are unique
+    * across modules (pinned by RegistrySpec): `Map ++` is right-biased,
+    * so a reused name would silently replace the earlier query.
+    */
+  val modules: Seq[graft.queries.QueryModule] = {
+    import graft.queries._
+    Seq(
+      Relational, DialectQueries, PipelineQueries, StreamQueries,
+      CompositionQueries, ExtendedQueries, Round3Queries, Round4Queries,
+      Round6Queries, Round7Queries, Round8Queries, Round8bQueries,
+      Round8cQueries, Round8dQueries, Round8eQueries, Round8fQueries,
+      Round8gQueries, Round8hQueries, Round8iQueries, Round8jQueries,
+      Round8kQueries, Round8lQueries, Round8mQueries, Round8nQueries,
+      Round8oQueries, Round8pQueries, Round8qQueries, Round8rQueries,
+      Round8sQueries, Round8tQueries, Round8uQueries, Round8vQueries,
+      Round8wQueries, Round8xQueries, Round8yQueries, Round9aQueries,
+      Round9bQueries, Round9cQueries, Round9dQueries, Round10aQueries,
+      Round10bQueries, Round10cQueries, Round10dQueries, Round10eQueries,
+      Round10fQueries, Round11aQueries, Round11bQueries, Round11cQueries,
+      Round11dQueries, Round11eQueries, Round11fQueries, Round12aQueries,
+      Round12bQueries, Round13aQueries, Round14Queries, Round15Queries,
+      Round16Queries)
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.Relational.queries ++
-    graft.queries.DialectQueries.queries ++
-    graft.queries.PipelineQueries.queries ++
-    graft.queries.StreamQueries.queries ++
-    graft.queries.CompositionQueries.queries ++
-    graft.queries.ExtendedQueries.queries ++
-    graft.queries.Round3Queries.queries ++
-    graft.queries.Round4Queries.queries ++
-    graft.queries.Round6Queries.queries ++
-    graft.queries.Round7Queries.queries ++
-    graft.queries.Round8Queries.queries ++
-    graft.queries.Round8bQueries.queries ++
-    graft.queries.Round8cQueries.queries ++
-    graft.queries.Round8dQueries.queries ++
-    graft.queries.Round8eQueries.queries ++
-    graft.queries.Round8fQueries.queries ++
-    graft.queries.Round8gQueries.queries ++
-    graft.queries.Round8hQueries.queries ++
-    graft.queries.Round8iQueries.queries ++
-    graft.queries.Round8jQueries.queries ++
-    graft.queries.Round8kQueries.queries ++
-    graft.queries.Round8lQueries.queries ++
-    graft.queries.Round8mQueries.queries ++
-    graft.queries.Round8nQueries.queries ++
-    graft.queries.Round8oQueries.queries ++
-    graft.queries.Round8pQueries.queries ++
-    graft.queries.Round8qQueries.queries ++
-    graft.queries.Round8rQueries.queries ++
-    graft.queries.Round8sQueries.queries ++
-    graft.queries.Round8tQueries.queries ++
-    graft.queries.Round8uQueries.queries ++
-    graft.queries.Round8vQueries.queries ++
-    graft.queries.Round8wQueries.queries ++
-    graft.queries.Round8xQueries.queries ++
-    graft.queries.Round8yQueries.queries ++
-    graft.queries.Round9aQueries.queries ++
-    graft.queries.Round9bQueries.queries ++
-    graft.queries.Round9cQueries.queries ++
-    graft.queries.Round9dQueries.queries ++
-    graft.queries.Round10aQueries.queries ++
-    graft.queries.Round10bQueries.queries ++
-    graft.queries.Round10cQueries.queries ++
-    graft.queries.Round10dQueries.queries ++
-    graft.queries.Round10eQueries.queries ++
-    graft.queries.Round10fQueries.queries ++
-    graft.queries.Round11aQueries.queries ++
-    graft.queries.Round11bQueries.queries ++
-    graft.queries.Round11cQueries.queries ++
-    graft.queries.Round11dQueries.queries ++
-    graft.queries.Round11eQueries.queries ++
-    graft.queries.Round11fQueries.queries ++
-    graft.queries.Round12aQueries.queries ++
-    graft.queries.Round12bQueries.queries ++
-    graft.queries.Round13aQueries.queries ++
-    graft.queries.Round14Queries.queries ++
-    graft.queries.Round15Queries.queries ++
-    graft.queries.Round16Queries.queries
+    modules.map(_.queries).reduce(_ ++ _)
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
-    graft.queries.Relational.oracles ++
-    graft.queries.DialectQueries.oracles ++
-    graft.queries.PipelineQueries.oracles ++
-    graft.queries.StreamQueries.oracles ++
-    graft.queries.CompositionQueries.oracles ++
-    graft.queries.ExtendedQueries.oracles ++
-    graft.queries.Round3Queries.oracles ++
-    graft.queries.Round4Queries.oracles ++
-    graft.queries.Round6Queries.oracles ++
-    graft.queries.Round7Queries.oracles ++
-    graft.queries.Round8Queries.oracles ++
-    graft.queries.Round8bQueries.oracles ++
-    graft.queries.Round8cQueries.oracles ++
-    graft.queries.Round8dQueries.oracles ++
-    graft.queries.Round8eQueries.oracles ++
-    graft.queries.Round8fQueries.oracles ++
-    graft.queries.Round8gQueries.oracles ++
-    graft.queries.Round8hQueries.oracles ++
-    graft.queries.Round8iQueries.oracles ++
-    graft.queries.Round8jQueries.oracles ++
-    graft.queries.Round8kQueries.oracles ++
-    graft.queries.Round8lQueries.oracles ++
-    graft.queries.Round8mQueries.oracles ++
-    graft.queries.Round8nQueries.oracles ++
-    graft.queries.Round8oQueries.oracles ++
-    graft.queries.Round8pQueries.oracles ++
-    graft.queries.Round8qQueries.oracles ++
-    graft.queries.Round8rQueries.oracles ++
-    graft.queries.Round8sQueries.oracles ++
-    graft.queries.Round8tQueries.oracles ++
-    graft.queries.Round8uQueries.oracles ++
-    graft.queries.Round8vQueries.oracles ++
-    graft.queries.Round8wQueries.oracles ++
-    graft.queries.Round8xQueries.oracles ++
-    graft.queries.Round8yQueries.oracles ++
-    graft.queries.Round9aQueries.oracles ++
-    graft.queries.Round9bQueries.oracles ++
-    graft.queries.Round9cQueries.oracles ++
-    graft.queries.Round9dQueries.oracles ++
-    graft.queries.Round10aQueries.oracles ++
-    graft.queries.Round10bQueries.oracles ++
-    graft.queries.Round10cQueries.oracles ++
-    graft.queries.Round10dQueries.oracles ++
-    graft.queries.Round10eQueries.oracles ++
-    graft.queries.Round10fQueries.oracles ++
-    graft.queries.Round11aQueries.oracles ++
-    graft.queries.Round11bQueries.oracles ++
-    graft.queries.Round11cQueries.oracles ++
-    graft.queries.Round11dQueries.oracles ++
-    graft.queries.Round11eQueries.oracles ++
-    graft.queries.Round11fQueries.oracles ++
-    graft.queries.Round12aQueries.oracles ++
-    graft.queries.Round12bQueries.oracles ++
-    graft.queries.Round13aQueries.oracles ++
-    graft.queries.Round14Queries.oracles ++
-    graft.queries.Round15Queries.oracles ++
-    graft.queries.Round16Queries.oracles
+    modules.map(_.oracles).reduce(_ ++ _)
 }

@@ -6,6 +6,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (`TESTDATA.md`): one parquet file per table under a scale-factor
   * directory. At 100 TB each table would be a partitioned parquet
   * dataset; `spark.read.parquet(dir)` handles both layouts.
+  *
+  * Every read here goes through [[CachedParquet.read]], so a repeated
+  * load passes the cached schema and starts no Spark job.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -15,7 +18,7 @@ object Tables {
   def path(dir: String, name: String): String = s"$dir/$name.parquet"
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    if (name == "events") loadEvents(spark, dir) else spark.read.parquet(path(dir, name))
+    if (name == "events") loadEvents(spark, dir) else CachedParquet.read(spark, path(dir, name))
 
   /** `events.ts` has shipped as both parquet TIMESTAMP(NANOS) (rounds
     * ≤7), which Spark's vectorized reader rejects without the legacy
@@ -32,7 +35,7 @@ object Tables {
   private def loadEvents(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(path(dir, "events"))
+    val raw = CachedParquet.read(spark, path(dir, "events"))
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
@@ -85,19 +88,16 @@ object Tables {
     * wins.
     */
   /** Cache key component for a source-data directory: absolute path
-    * PLUS a fingerprint of every table file's (name, size, mtime) —
+    * PLUS a fingerprint of every file under it (path, size, mtime) —
     * regenerating the dataset at the same path must invalidate cached
     * fixtures (hashing only the path served stale fixtures with an
     * undiagnosable oracle mismatch).
     */
   def dirFingerprint(dir: String): String = {
     val d = new java.io.File(dir)
-    val files = Option(d.listFiles()).getOrElse(Array.empty[java.io.File])
-      .sortBy(_.getName)
-      .map(f => s"${f.getName}:${f.length}:${f.lastModified}")
     java.lang.Long.toHexString(
       scala.util.hashing.MurmurHash3.stringHash(
-        d.getAbsolutePath + "|" + files.mkString("|")).toLong & 0xffffffffL)
+        d.getAbsolutePath + "|" + CachedParquet.listing(d).mkString("|")).toLong & 0xffffffffL)
   }
 
   def storedFixture(spark: SparkSession, dir: String, name: String)(
@@ -138,10 +138,10 @@ object Tables {
         if (new java.io.File(root, "_SUCCESS").exists()) {
           org.apache.commons.io.FileUtils.deleteDirectory(stage)
         } else {
-          return spark.read.parquet(stage.toString)
+          return CachedParquet.read(spark, stage.toString)
         }
       }
     }
-    spark.read.parquet(root.toString)
+    CachedParquet.read(spark, root.toString)
   }
 }

@@ -130,7 +130,7 @@ case class PqEncode(child: Expression, codebooks: Array[Array[Array[Double]]])
          |  $err += $minD;
          |}
          |Object[] $vals = new Object[] {
-         |  org.apache.spark.sql.catalyst.util.UnsafeArrayData
+         |  org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
          |    .fromPrimitiveArray($codes),
          |  java.lang.Double.valueOf($err) };
          |${ev.value} =

@@ -348,8 +348,8 @@ case class Sq8CosineToQueryCols(codes: Expression, mn: Expression,
         Seq("i", "dot", "nx", "nq", "m", "span", "x", "q", "denom")
           .map(ctx.freshName)
       s"""
-         |if ($c.length != $qRef.length || $mnA.numElements() != $qRef.length
-         |    || $mxA.numElements() != $qRef.length) {
+         |if ($c.length != $qRef.length || $mnA.numElements() != $qRef.length ||
+         |    $mxA.numElements() != $qRef.length) {
          |  throw new IllegalArgumentException(
          |    "sq8_cosine_to_query_cols: codes=" + $c.length +
          |    " mn=" + $mnA.numElements() + " mx=" + $mxA.numElements() +

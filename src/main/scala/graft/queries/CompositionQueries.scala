@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * ships a bounded-error oracle — DuckDB recomputes the exact counts
   * and the within-bound boolean.
   */
-object CompositionQueries {
+object CompositionQueries extends QueryModule {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_pipeline_corpus" -> ((s, dir) => {

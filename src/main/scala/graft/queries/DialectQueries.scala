@@ -9,7 +9,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * dialect engine produces standard-correct results on cleanly-typed
   * data, while its coercion quirks stay covered by DialectSpec.
   */
-object DialectQueries {
+object DialectQueries extends QueryModule {
 
   private def run(sql: String): (SparkSession, String) => DataFrame =
     (s, dir) => Executor.sql(s, dir, sql)

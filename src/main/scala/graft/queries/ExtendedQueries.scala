@@ -21,7 +21,7 @@ import org.apache.spark.sql.types.DecimalType
   * ORDER BY; DuckDB ORDER BY gets explicit NULLS FIRST where a sort
   * key is nullable (Spark's ASC default) — DuckDB defaults NULLS LAST.
   */
-object ExtendedQueries {
+object ExtendedQueries extends QueryModule {
 
   private def dsum(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     sum(c.cast(DecimalType(18, 2))).cast("double")

@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.DecimalType
   * approximate top-k analytically) and are additionally covered
   * against brute-force ground truth in PipelineOpsSpec.
   */
-object PipelineQueries {
+object PipelineQueries extends QueryModule {
 
   /** The fixed ANN probe vector: embedding of vec_id=0 (collecting one
     * row to form the query literal is input preparation, not a data

@@ -19,7 +19,7 @@ import org.apache.spark.sql.types.DecimalType
   *  - Every query ends in a total ORDER BY over a unique key set so the
   *    row order is deterministic on both sides.
   */
-object Relational {
+object Relational extends QueryModule {
 
   /** Exact, order-independent sum of a ~2-decimal double column. */
   private def dsum(c: Column): Column =

@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   * class), with near-singleton blocks because each key still encodes
   * every word of the name.
   */
-object Round10aQueries {
+object Round10aQueries extends QueryModule {
 
   private val auditKeys =
     MasterData.prefixKeys(col("nm"), prefixLen = 18, revPrefixLen = 18)

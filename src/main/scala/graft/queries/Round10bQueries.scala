@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * incremental ≡ rebuild claim, because it is literally the q_entities
   * oracle replayed over the same corpus and parameters.
   */
-object Round10bQueries {
+object Round10bQueries extends QueryModule {
 
   private def keys = MasterData.prefixKeys(col("nm"), 18, 30)
 

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * the fold with GROUP BY + LAG/LEAD windows — drop-on-equality makes
   * the lag-collapse equivalent to the running-tail fold.
   */
-object Round10cQueries {
+object Round10cQueries extends QueryModule {
 
   private[queries] def multiUpdates(s: SparkSession, dir: String): DataFrame = {
     val cust = Tables.load(s, dir, "customer")

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * epoch second, hi = lo + (event_id mod 7 + 1)·600 — integer bounds
   * both engines recompute exactly.
   */
-object Round10dQueries {
+object Round10dQueries extends QueryModule {
 
   private def intervals(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "events")

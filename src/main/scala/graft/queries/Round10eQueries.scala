@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * The EWMA/ACF oracle SQL is generated by the same lag-index loops
   * that build the Spark plans, so the two renderings cannot drift.
   */
-object Round10eQueries {
+object Round10eQueries extends QueryModule {
 
   private val FunnelSteps = Seq("signup", "view", "click", "purchase")
   private val FunnelWindowSec = 172800L // 2 days

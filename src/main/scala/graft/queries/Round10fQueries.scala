@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * runs, and every selection compares BIGINT micro-quantized scores,
   * so the two engines take identical argmax branches.
   */
-object Round10fQueries {
+object Round10fQueries extends QueryModule {
 
   private val Probes = Seq(0L, 1L, 2L)
   private val CandCut = 24

@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * `parse_ok = false` with null fields, never an error (the no-crash
   * contract for malformed media at scale).
   */
-object Round11aQueries {
+object Round11aQueries extends QueryModule {
 
   /** The media payload table as STORED state (r17, the q_entities /
     * DedupFixtures staging precedent): a real system stores media

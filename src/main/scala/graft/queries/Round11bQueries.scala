@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * sums with one final IEEE division, so both engines take identical
   * ranking branches and the oracles replay the math term for term.
   */
-object Round11bQueries {
+object Round11bQueries extends QueryModule {
 
   private val MaxDeg = 64
   private val TopK = 3

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * 13th order's rows are malformed non-URLs and must land in the NULL
   * bucket, not error.
   */
-object Round11cQueries {
+object Round11cQueries extends QueryModule {
 
   /** The synthetic crawl shared by the whole URL family (q_url_canonical
     * here; q_url_rules / q_url_increment in Round11f — ONE generator, so

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * replays chunking, per-chunk language ID, and the island arithmetic
   * end to end.
   */
-object Round11dQueries {
+object Round11dQueries extends QueryModule {
 
   private val FrHead = "le la les et est une un pas pour dans "
   private val DeTail = " der die das und ist nicht ein eine zu mit"

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * serves readStream (StreamingSpec drives it over a file source) and
   * the batch oracle below.
   */
-object Round11eQueries {
+object Round11eQueries extends QueryModule {
 
   private val WindowSec = 21600L // 6 hours
 

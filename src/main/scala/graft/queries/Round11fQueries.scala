@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * rebuild contract as the dedup/fingerprint/entity increments: the
   * oracle IS the full-rebuild SQL).
   */
-object Round11fQueries {
+object Round11fQueries extends QueryModule {
 
   /** The shared synthetic crawl lives in [[Round11cQueries.syntheticUrls]]
     * — one generator for the whole URL family, so the q_url_increment

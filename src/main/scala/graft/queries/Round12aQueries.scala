@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * a wrong fold, a missed case-fold, or a non-idempotent re-encoding
   * of an `xn--` host all break the hash check.
   */
-object Round12aQueries {
+object Round12aQueries extends QueryModule {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * The oracle replays the synthesis and the integer vote arithmetic
   * end to end.
   */
-object Round12bQueries {
+object Round12bQueries extends QueryModule {
 
   /** (prompt, win, lose, rater, first) comparison rows: base votes
     * (winner by the id mod 3 rule, rater (id·3+1) mod 7), reversed

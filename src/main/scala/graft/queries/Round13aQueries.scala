@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * mapping breaks the hash. VideoFramesSpec cross-checks the decoder
   * frame-for-frame against the JDK's independent ImageIO GIF reader.
   */
-object Round13aQueries {
+object Round13aQueries extends QueryModule {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * reference's IMAGE resolver list, `pkg/handlers/insert.go:199`, and
   * the last real-corpus format that was still header-only).
   */
-object Round14Queries {
+object Round14Queries extends QueryModule {
 
   /** SQ8 bounds staged as a [[Tables.storedFixture]] (r14 verdict item
     * 2): a 64-row (dim, mn, mx) parquet frame written once, collected

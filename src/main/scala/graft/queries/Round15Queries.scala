@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * driver row (r14 verdict item 6 — the last media-family boundary
   * that was grayscale-only; real corpora are 3-component YCbCr).
   */
-object Round15Queries {
+object Round15Queries extends QueryModule {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * quantizes within the coarse cell: global bounds waste code range in
   * tight cells, so the A/B row prices exactly what local bounds buy).
   */
-object Round16Queries {
+object Round16Queries extends QueryModule {
 
   /** (vec_id, embedding, ivf_cid) under the q_ivf_sq8 axis-centroid
     * geometry: cell = argmax of the first 8 raw components, first

@@ -19,7 +19,7 @@ import org.apache.spark.sql.types.DecimalType
   * on both sides where a double survives unrounded; every row-dump
   * query ends in a total ORDER BY.
   */
-object Round3Queries {
+object Round3Queries extends QueryModule {
 
   private def dsum(c: Column): Column =
     sum(c.cast(DecimalType(18, 2))).cast("double")

@@ -19,7 +19,7 @@ import org.apache.spark.sql.types.DecimalType
   * sides, md5 for anything an independent engine must recompute, and a
   * total ORDER BY on every row dump.
   */
-object Round4Queries {
+object Round4Queries extends QueryModule {
 
   /** Exact decimal accumulation of the scale-4 revenue term; only the
     * final cast produces a double (same helper as Round3Queries).

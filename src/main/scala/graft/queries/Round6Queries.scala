@@ -24,7 +24,7 @@ import org.apache.spark.sql.types.DecimalType
   * engines, ln is rounded per-row before any cross-row aggregate,
   * and every row dump carries a total ORDER BY.
   */
-object Round6Queries {
+object Round6Queries extends QueryModule {
 
   private def dsumExact(c: Column): Column = sum(c).cast("double")
 
@@ -214,7 +214,9 @@ object Round6Queries {
       // total re-aggregates the per-part DECIMAL partials — decimal
       // addition is exact and associative, so sum-of-sums equals the
       // direct decimal sum bit-for-bit (both only cast to double at the
-      // end), and np is exactly the per-part row count. The scan is
+      // end), and np counts the non-NULL part keys, as COUNT(DISTINCT
+      // l_partkey) does (a NULL-key group's value still belongs in t,
+      // but the group is not a part). The scan is
       // spread (loadSpread) because the decimal partial agg is
       // CPU-bound on the single-split testdata scan (the q_corr_matrix
       // precedent; decimal sums commute, so results are identical).
@@ -222,7 +224,7 @@ object Round6Queries {
         .groupBy(col("l_partkey")).agg(sum(term).as("vdec"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val tot = pvd.agg(sum(col("vdec")).cast("double").as("t"),
-        count(lit(1)).as("np"))
+        count(col("l_partkey")).as("np"))
       pvd.select(col("l_partkey"), col("vdec").cast("double").as("value"))
         .crossJoin(broadcast(tot))
         .filter(col("value") > lit(1.2) * (col("t") / col("np")))

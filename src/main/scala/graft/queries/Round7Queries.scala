@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * one BPE merge iteration (tokenizer-training pair counts), and the
   * cross-source shingle-overlap matrix (mixture-curation statistic).
   */
-object Round7Queries {
+object Round7Queries extends QueryModule {
 
   /** Planted quality junk for q_quality_audit and q_pipeline_curation
     * (ONE definition — the two oracles must stay byte-identical on

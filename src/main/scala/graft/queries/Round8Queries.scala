@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * planted-ceiling indirection except where an operator is
   * approximate by design).
   */
-object Round8Queries {
+object Round8Queries extends QueryModule {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

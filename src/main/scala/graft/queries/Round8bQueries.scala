@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * fingerprinting, and snapshot diffing. Every query is deterministic
   * and recomputed end to end by its DuckDB oracle.
   */
-object Round8bQueries {
+object Round8bQueries extends QueryModule {
 
   private val searchTerms = Seq("spark", "query", "join", "filter")
 

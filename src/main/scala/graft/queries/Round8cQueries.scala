@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * maintenance, and the streaming windowed top-k. Every query is
   * deterministic and recomputed end to end by its DuckDB oracle.
   */
-object Round8cQueries {
+object Round8cQueries extends QueryModule {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

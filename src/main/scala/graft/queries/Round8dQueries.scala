@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * query is deterministic and recomputed end to end by its DuckDB
   * oracle.
   */
-object Round8dQueries {
+object Round8dQueries extends QueryModule {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

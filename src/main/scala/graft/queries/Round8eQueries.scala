@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * audit that sizes streaming state bounds. Every query is
   * deterministic and recomputed end to end by its DuckDB oracle.
   */
-object Round8eQueries {
+object Round8eQueries extends QueryModule {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

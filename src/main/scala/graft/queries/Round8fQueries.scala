@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * and the streaming windowed quality monitor. Every query is
   * deterministic and recomputed end to end by its DuckDB oracle.
   */
-object Round8fQueries {
+object Round8fQueries extends QueryModule {
 
   /** The q_quality_audit planted-junk corpus: reused so the quality
     * rates these queries report are non-vacuous.

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * sampling, and per-source tokenizer-fertility stats. Every query is
   * deterministic and recomputed end to end by its DuckDB oracle.
   */
-object Round8gQueries {
+object Round8gQueries extends QueryModule {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * synopsis — plus the per-source n-gram diversity audit. Every query
   * is deterministic and recomputed end to end by its DuckDB oracle.
   */
-object Round8hQueries {
+object Round8hQueries extends QueryModule {
 
   /** The item key inside events.props JSON. */
   private val itemOf: Column =

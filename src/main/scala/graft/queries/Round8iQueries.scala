@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * Every row is deterministic and recomputed end to end by its DuckDB
   * oracle.
   */
-object Round8iQueries {
+object Round8iQueries extends QueryModule {
 
   /** Planted junk for the filter-evaluation rows: every 23rd doc (23
     * is coprime to the 20-source cycle, so every source gets junk)

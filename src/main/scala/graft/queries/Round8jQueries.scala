@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * approximate ranking — is engine-exact and recomputed end to end by
   * its DuckDB oracle.
   */
-object Round8jQueries {
+object Round8jQueries extends QueryModule {
 
   private val M = 8  // subspaces (64 dims / 8 = 8 dims each)
   private val K = 16 // codewords per subspace (4-bit codes)

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * end to end; every expression tree mirrored term-for-term by its
   * DuckDB oracle.
   */
-object Round8kQueries {
+object Round8kQueries extends QueryModule {
 
   /** Planted symbol junk so the Gopher symbol/alpha rules are
     * non-vacuous on this corpus (organic docs are pure lowercase

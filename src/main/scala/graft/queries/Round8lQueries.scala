@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * ratios/folds of exact integer counts, so the rounded doubles are
   * engine-exact and every row is DuckDB-checkable.
   */
-object Round8lQueries {
+object Round8lQueries extends QueryModule {
 
   /** The q_score_auc junk-labeling technique on its own modulus: every
     * 29th doc spawns three labeled-junk variants (too-short, pure

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * integer statistics a 100 TB rewrite decision would be made from,
   * and both are DuckDB-recomputable row for row.
   */
-object Round8mQueries {
+object Round8mQueries extends QueryModule {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

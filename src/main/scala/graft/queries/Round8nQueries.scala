@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * folds), and the ftfy-style mojibake audit. Both DuckDB-checked
   * row for row.
   */
-object Round8nQueries {
+object Round8nQueries extends QueryModule {
 
   /** UTF-8-read-as-Latin-1 junk appended to every 35th doc: café,
     * a curly quote, an NBSP and a replacement char, all in their

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * companion to q_anomaly_zscore). Both pure integer/exact-percentile
   * arithmetic, DuckDB-checked row for row.
   */
-object Round8oQueries {
+object Round8oQueries extends QueryModule {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * corrupted orders batch, and the Benford first-digit audit. Both
   * integer-exact / ordered-fold deterministic, DuckDB-checked.
   */
-object Round8pQueries {
+object Round8pQueries extends QueryModule {
 
   /** Orders plus a planted bad batch (every 997th order re-inserted
     * with its key DUPLICATED, a negative total, status 'X', and a NULL

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * whole curve is exact-integer evaluation of the engine-exact
   * centroid scorer, so DuckDB replays every point.
   */
-object Round8qQueries {
+object Round8qQueries extends QueryModule {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

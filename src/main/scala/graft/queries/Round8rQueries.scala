@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * over the co-click graph, fixed-round and replayed unrolled by
   * DuckDB.
   */
-object Round8rQueries {
+object Round8rQueries extends QueryModule {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

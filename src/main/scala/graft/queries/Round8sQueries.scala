@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * assortativity, both over the day-grain co-click graph and both
   * ratios of exact BIGINT counts mirrored term-for-term by DuckDB.
   */
-object Round8sQueries {
+object Round8sQueries extends QueryModule {
 
   private val itemOf =
     get_json_object(col("props"), "$.k").cast("long")

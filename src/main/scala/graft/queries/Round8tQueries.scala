@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * frequent event-type path table and the partition/broadcast sizing
   * advisor. Both exact-integer, DuckDB-checked.
   */
-object Round8tQueries {
+object Round8tQueries extends QueryModule {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * construction (only gap DIFFERENCES and truncated-hour counts are
   * used). DuckDB-checked.
   */
-object Round8uQueries {
+object Round8uQueries extends QueryModule {
 
   /** Events plus one planted bot: 200 events at exactly one-second
     * intervals inside a single hour — fires both the fast-gap and the

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * guarantees a flagged window; batch replay is the identical plan
   * the oracle recomputes.
   */
-object Round8vQueries {
+object Round8vQueries extends QueryModule {
 
   /** The q_bot_flags plant: one synthetic user firing 200 events at
     * one-second intervals inside the 2024-01-05 12:00 hour.

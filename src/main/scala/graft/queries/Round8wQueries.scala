@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * junk suffix) make every pair's best span analytic; the oracle
   * replays the string-gram diagonal-island reduction exactly.
   */
-object Round8wQueries {
+object Round8wQueries extends QueryModule {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * features) and the day-of-week seasonal index. Exact-integer
   * ratios throughout, DuckDB-checked.
   */
-object Round8xQueries {
+object Round8xQueries extends QueryModule {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * order-to-ship latency percentiles per priority. Exact decimal sums
   * / R-7 percentiles; DuckDB-checked.
   */
-object Round8yQueries {
+object Round8yQueries extends QueryModule {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

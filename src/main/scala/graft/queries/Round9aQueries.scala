@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * level-shift detection over the daily series. Deterministic end to
   * end; every expression mirrored by its DuckDB oracle.
   */
-object Round9aQueries {
+object Round9aQueries extends QueryModule {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

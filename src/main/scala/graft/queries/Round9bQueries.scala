@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * oracles replay blocking, edit distance, connected components, and
   * the SCD case split end to end.
   */
-object Round9bQueries {
+object Round9bQueries extends QueryModule {
 
   private[queries] val words = Seq("alpha", "bravo", "charl", "delta", "echox",
     "foxtr", "golfx", "hotel", "india", "julie")

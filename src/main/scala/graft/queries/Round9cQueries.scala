@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * audit. Deterministic end to end; the PIT oracle replays the FULL
   * merge-then-lookup composition in SQL.
   */
-object Round9cQueries {
+object Round9cQueries extends QueryModule {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{CachedParquet, Tables}
 import graft.ops.{Profile, Similarity}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * assignment of the FULL corpus, proving incremental append ≡
   * rebuild-assign wherever the batch lands.
   */
-object Round9dQueries {
+object Round9dQueries extends QueryModule {
 
   private val nCells = 8
   private val dims = 64
@@ -67,7 +67,7 @@ object Round9dQueries {
       // is stable
       Similarity.updateIvfIndex(s, path,
         quantized(s, dir).filter(col("vec_id") % 10 === 0), "vec_id", "vq")
-      s.read.parquet(path)
+      CachedParquet.read(s, path)
         .groupBy(col("ivf_cid"))
         .agg(countDistinct(col("vec_id")).as("n_ids"))
         .orderBy(col("ivf_cid"))

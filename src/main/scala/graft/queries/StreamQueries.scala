@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.DecimalType
   * `readStream` — StreamingSpec proves stream/batch equivalence), plus
   * the multimodal feature-extraction pipeline.
   */
-object StreamQueries {
+object StreamQueries extends QueryModule {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_stream_tumbling" -> ((s, dir) => {

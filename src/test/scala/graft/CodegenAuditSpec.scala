@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.codegen.{ByteCodeStats, CodegenFallback}
 import org.apache.spark.sql.execution.debug.codegenStringSeq
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,7 +16,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *      `spark.sql.codegen.hugeMethodLimit` — the exact predicate
   *      `WholeStageCodegenExec.doExecute` uses to silently fall back
   *      at runtime, or
-  *   2. any plan contains a `CodegenFallback` expression class outside
+  *   2. any stage fails to compile at all — `codegenStringSeq`
+  *      reports that as `ByteCodeStats.UNAVAILABLE`, and at runtime the
+  *      stage silently runs interpreted (a generated-Java reference to
+  *      a class that moved between Spark versions did exactly that), or
+  *   3. any plan contains a `CodegenFallback` expression class outside
   *      the documented allowlist — an interpreted per-row eval hiding
   *      inside an otherwise codegen'd stage.
   *
@@ -74,13 +78,16 @@ class CodegenAuditSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       val overLimit = Seq.newBuilder[String]
+      val uncompiled = Seq.newBuilder[String]
       val undocumented = Seq.newBuilder[String]
       var stages = 0
       SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
         val plan = fn(spark, sf).queryExecution.executedPlan
-        codegenStringSeq(plan).foreach { case (_, _, stats) =>
+        codegenStringSeq(plan).foreach { case (subtree, _, stats) =>
           stages += 1
-          if (stats.maxMethodCodeSize > limit)
+          if (stats == ByteCodeStats.UNAVAILABLE)
+            uncompiled += s"$name: ${subtree.linesIterator.next().take(160)}"
+          else if (stats.maxMethodCodeSize > limit)
             overLimit += s"$name: maxMethodCodeSize=${stats.maxMethodCodeSize}"
         }
         val fallbacks = plan.collectWithSubqueries { case p =>
@@ -97,6 +104,9 @@ class CodegenAuditSpec extends AnyFunSuite {
       assert(overLimit.result().isEmpty,
         s"silent codegen fallback (> $limit bytecode bytes/method):\n" +
           overLimit.result().mkString("\n"))
+      assert(uncompiled.result().isEmpty,
+        "codegen stages that fail to compile (run interpreted):\n" +
+          uncompiled.result().mkString("\n"))
       assert(undocumented.result().isEmpty,
         "undocumented CodegenFallback expressions:\n" +
           undocumented.result().mkString("\n"))

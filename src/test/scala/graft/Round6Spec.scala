@@ -201,6 +201,32 @@ class Round6Spec extends AnyFunSuite {
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastHashJoin"), p)
   }
 
+  test("q_tpch_q11: a NULL-partkey group adds to t but not to np") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_q11_null")
+      .toFile.getAbsolutePath
+    try {
+      // t = 660; COUNT(DISTINCT l_partkey) = 3 puts the cut at 264,
+      // so only part 3 passes; counting the NULL group too (np = 4)
+      // would lower it to 198 and let part 2 through
+      Seq[(Option[Long], Double)]((Some(1L), 100.0), (Some(2L), 200.0),
+        (Some(3L), 300.0), (None, 60.0))
+        .toDF("l_partkey", "l_extendedprice")
+        .withColumn("l_discount", lit(0.0))
+        .write.parquet(Tables.path(dir, "lineitem"))
+      val got = SparkEntry.queries("q_tpch_q11")(spark, dir).collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      assert(got == Seq((3L, 300.0)))
+      spark.read.parquet(Tables.path(dir, "lineitem"))
+        .createOrReplaceTempView("lineitem")
+      try {
+        val oracle = spark.sql(SparkEntry.oracleSql("q_tpch_q11")).collect()
+          .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+        assert(got == oracle)
+      } finally spark.catalog.dropTempView("lineitem")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
   test("q_tpch_q8: every dim chain broadcasts, date filter pushed") {
     val p = plan("q_tpch_q8")
     assert("BroadcastHashJoin".r.findAllIn(p).size >= 2, p)

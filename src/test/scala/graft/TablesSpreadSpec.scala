@@ -32,15 +32,22 @@ class TablesSpreadSpec extends AnyFunSuite {
       // a multi-file copy of the documents table; tiny files would
       // normally pack into one split (openCost 4 MB), so pin the
       // split params to make the scan genuinely multi-split — the
-      // stand-in for a 100 TB table's thousands of natural splits
+      // stand-in for a 100 TB table's thousands of natural splits.
+      // The split size derives from the written files: at most the
+      // smallest file over the core count, so EVERY file alone yields
+      // at least defaultParallelism splits on any host.
+      val target = spark.sparkContext.defaultParallelism
       Tables.load(spark, sf, "documents")
         .repartition(8).write.mode("overwrite")
         .parquet(s"$dir/documents.parquet")
-      spark.conf.set("spark.sql.files.maxPartitionBytes", "16384")
+      val smallest = new java.io.File(s"$dir/documents.parquet").listFiles()
+        .filter(_.getName.endsWith(".parquet")).map(_.length).min
+      spark.conf.set("spark.sql.files.maxPartitionBytes",
+        math.max(1L, smallest / target).toString)
       spark.conf.set("spark.sql.files.openCostInBytes", "0")
       val plain = Tables.load(spark, dir, "documents")
       val n = plain.rdd.getNumPartitions
-      assert(n >= spark.sparkContext.defaultParallelism,
+      assert(n >= target,
         s"probe setup: expected a multi-split scan, got $n partitions")
       val spread = Tables.loadSpread(spark, dir, "documents", "doc_id")
       assert(spread.rdd.getNumPartitions == n,
